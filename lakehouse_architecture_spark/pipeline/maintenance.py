@@ -51,10 +51,10 @@ def compact_table(
     """
     import glob
     import os
-    import shutil
 
     from lakehouse_architecture_spark.pipeline.table_format import (
         plan_tagged_bins,
+        swap_dir,
         write_bins_flat,
     )
 
@@ -84,7 +84,9 @@ def compact_table(
         write_bins_flat(tagged, df.columns, staging_dir)
         return n_bins
 
-    tmp = path.rstrip("/") + "__compacting"
+    # every rewrite stages beside its target and swaps in through
+    # table_format.swap_dir: readers never see a half-compacted or
+    # partly deleted table, and no staging dir is shared between calls
     if partition_col and partitions is not None:
         # Partition-subset mode only makes sense on a Hive-layout table
         # (path/<col>=<value>/...). Rewrite JUST the selected partition
@@ -102,32 +104,20 @@ def compact_table(
                     f"partition value {v!r} needs Hive path escaping; "
                     "compact the full table or rename the partition"
                 )
-        part_dirs = {
-            str(v): os.path.join(path, f"{partition_col}={v}") for v in partitions
-        }
-        present = {v: d for v, d in part_dirs.items() if os.path.isdir(d)}
-        if not present:
-            return 0
-        total_written = 0
-        for v, dest in present.items():
-            src = os.path.join(tmp, f"{partition_col}={v}")
-            # the partition column lives in the dir name, not the files, so
-            # each partition rewrites as a plain (unpartitioned) dir —
-            # plan + execute each partition independently (a single global
-            # plan would put rows of every partition value in every task)
-            total_written += rewrite(dest, src)
-            shutil.rmtree(dest)
-            os.rename(src, dest)
-        shutil.rmtree(tmp, ignore_errors=True)
-        return total_written
+        part_dirs = dict.fromkeys(
+            os.path.join(path, f"{partition_col}={v}") for v in partitions
+        )
+        # the partition column lives in the dir name, not the files, so
+        # each partition rewrites as a plain (unpartitioned) dir — plan +
+        # execute each partition independently (a single global plan
+        # would put rows of every partition value in every task)
+        return sum(
+            swap_dir(d, lambda tmp, d=d: rewrite(d, tmp))
+            for d in part_dirs
+            if os.path.isdir(d)
+        )
 
-    target = path.rstrip("/")  # rename() rejects a trailing-slash target
-    # stage to a temp sibling then swap — keeps readers from seeing a
-    # half-compacted table (a transactional format makes this atomic)
-    n_files = rewrite(target, tmp)
-    shutil.rmtree(target)
-    os.rename(tmp, target)
-    return n_files
+    return swap_dir(path, lambda tmp: rewrite(path, tmp))
 
 
 def clustered_write(

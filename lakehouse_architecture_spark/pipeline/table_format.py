@@ -6,9 +6,10 @@ one interface with two implementations:
 
 * ``delta`` — used automatically when the delta-spark package and jars are
   importable: transactional writes and a real ``MERGE INTO``.
-* ``parquet`` — snapshot semantics: MERGE = anti-join + union + atomic-ish
-  directory overwrite (operators/upsert). Correct, replay-idempotent, and
-  what the tests exercise here.
+* ``parquet`` — snapshot semantics: MERGE = anti-join + union
+  (operators/upsert) staged beside the table and swapped in by
+  :func:`swap_dir`. Correct, replay-idempotent, and what the tests
+  exercise here.
 
 ``resolve_format()`` picks at runtime; callers never branch.
 """
@@ -150,6 +151,49 @@ def write_bins_flat(tagged: DataFrame, cols: list[str], out_dir: str) -> None:
         shutil.rmtree(staging, ignore_errors=True)
 
 
+def swap_dir(target: str, stage):
+    """Replace the directory ``target`` with a snapshot written by
+    ``stage(tmp)``; returns what ``stage`` returns. The one crash-safe
+    swap behind every plain-parquet table rewrite: :meth:`ManagedTable.
+    merge` (so the streaming upsert sink) and :func:`pipeline.
+    maintenance.compact_table`, per table or per partition.
+
+    ``stage`` writes the complete new contents while the live table is
+    untouched; then two renames swap it in (target → old, staged →
+    target) and the old dir is removed. Never rmtree-then-rename: that
+    leaves NO table if the process dies between the steps, and readers
+    see a partly deleted one meanwhile. A crash between the two renames
+    leaves the old dir recoverable by hand.
+
+    Staged and old dirs are named per call (uuid), so neither a crashed
+    writer's leftover nor a racing writer's staging is ever renamed into
+    the table. They are ``.``-prefixed siblings: when ``target`` is a
+    partition dir (``<table>/dt=v``), Spark partition discovery skips
+    them, where a ``dt=v__tmp`` sibling would read as a phantom
+    partition (a ``_`` prefix hides only names without ``=``).
+
+    Local paths only (``os.rename``); URI targets take
+    :meth:`ManagedTable.merge`'s overwrite branch."""
+    import os
+    import shutil
+    import uuid
+
+    target = target.rstrip("/")  # rename() rejects a trailing-slash target
+    parent, name = os.path.split(target)
+    token = uuid.uuid4().hex[:12]
+    tmp = os.path.join(parent, f".{name}__staged-{token}")
+    old = os.path.join(parent, f".{name}__old-{token}")
+    try:
+        out = stage(tmp)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    os.rename(target, old)
+    os.rename(tmp, target)
+    shutil.rmtree(old)
+    return out
+
+
 def delta_available() -> bool:
     try:
         import delta  # noqa: F401
@@ -269,25 +313,10 @@ class ManagedTable:
             merged = truncate_lineage(merged, eager=True)
             self.overwrite(merged)
             return
-        # Local path: write to a temp sibling, then swap via two renames —
-        # never rmtree-then-rename, which leaves NO table at all if the
-        # process dies between the two steps. After "rename target → old",
-        # a crash leaves the old dir recoverable by hand; after
-        # "rename tmp → target" the table is complete. Per-writer uuid tmp
-        # names, same rationale as VersionedTable._commit: a shared name
-        # would let two racing merges overwrite each other's staged data.
-        import os
-        import shutil
-        import uuid
-
-        token = uuid.uuid4().hex[:12]
-        target = self.path.rstrip("/")
-        tmp = f"{target}__merging-{token}"
-        old = f"{target}__old-{token}"
-        merged.write.format(self.format).mode("overwrite").save(tmp)
-        os.rename(target, old)
-        os.rename(tmp, target)
-        shutil.rmtree(old)
+        swap_dir(
+            self.path,
+            lambda tmp: merged.write.format(self.format).mode("overwrite").save(tmp),
+        )
 
 
 class VersionedTable:
@@ -675,21 +704,6 @@ class VersionedTable:
             df = df.coalesce(target_files)
         return self._commit(df, latest + 1)
 
-    def _bin_tagged(
-        self,
-        snapshot: DataFrame,
-        sizes: dict[str, int],
-        order_col: str | None,
-        target_bytes: int,
-    ) -> tuple[DataFrame, int]:
-        """Tag every snapshot row with its file's compaction bin — a
-        thin wrapper over the shared :func:`plan_tagged_bins` (also the
-        seam the wide-manifest plan-boundedness guard in
-        tests/test_maintenance.py drives)."""
-        return plan_tagged_bins(
-            self.spark, snapshot, sizes, order_col, target_bytes
-        )
-
     def optimize(
         self,
         target_bytes: int = 128 * 1024 * 1024,
@@ -770,8 +784,8 @@ class VersionedTable:
                 clustered.select(*cols).write.mode("overwrite").parquet(tmp)
 
         else:
-            tagged, n_bins = self._bin_tagged(
-                snapshot, sizes, order_col, target_bytes
+            tagged, n_bins = plan_tagged_bins(
+                self.spark, snapshot, sizes, order_col, target_bytes
             )
 
             def stage(tmp: str) -> None:

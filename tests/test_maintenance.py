@@ -31,6 +31,26 @@ def test_compact_table(spark, tmp_path):
     assert {r["id"] for r in back.collect()} == set(range(12))
 
 
+def test_compact_table_ignores_stale_staging_leftover(spark, tmp_path):
+    """A crashed compaction's leftover staging dir must never be renamed
+    into the table: staging is per call, not a shared ``__compacting``."""
+    import shutil
+
+    path = str(tmp_path / "smallfiles")
+    for i in range(6):
+        spark.createDataFrame([(i, f"v{i}")], "id int, v string").coalesce(1).write.mode(
+            "append"
+        ).parquet(path)
+    stale = path + "__compacting"
+    os.makedirs(stale)
+    shutil.copy(_parquet_files(path)[0], os.path.join(stale, "bin-00003-0.parquet"))
+
+    compact_table(spark, path, target_file_mb=128)
+    back = spark.read.parquet(path)
+    assert back.count() == 6
+    assert sorted(r["id"] for r in back.collect()) == list(range(6))
+
+
 def test_compact_partition_subset_preserves_other_partitions(spark, tmp_path):
     """Partition-subset compaction must only touch the selected partitions —
     a subset rewrite that drops the rest of the table is data loss."""
@@ -57,6 +77,14 @@ def test_compact_partition_subset_preserves_other_partitions(spark, tmp_path):
     assert len(files_in("2024-01-02")) == 1
     # non-selected partition byte-identical (same files, untouched)
     assert sorted(files_in("2024-01-03")) == untouched_before
+    # no staging or old dir where partition discovery would read it as a
+    # phantom partition: Spark skips "."-names and "_"-names without "="
+    visible = sorted(
+        e
+        for e in os.listdir(path)
+        if not (e.startswith(".") or (e.startswith("_") and "=" not in e))
+    )
+    assert visible == ["dt=2024-01-01", "dt=2024-01-02", "dt=2024-01-03"]
 
     back = spark.read.parquet(path)
     assert back.count() == 12
@@ -444,7 +472,10 @@ def test_optimize_plan_tree_bounded_on_wide_manifest(spark, tmp_path):
     stay essentially the same size at 16 vs ~2k manifest entries."""
     from pyspark.sql import functions as F
 
-    from lakehouse_architecture_spark.pipeline.table_format import VersionedTable
+    from lakehouse_architecture_spark.pipeline.table_format import (
+        VersionedTable,
+        plan_tagged_bins,
+    )
 
     t = VersionedTable(spark, str(tmp_path / "wide"), keys=["id"])
     t.write(
@@ -456,7 +487,7 @@ def test_optimize_plan_tree_bounded_on_wide_manifest(spark, tmp_path):
     def plan_len(n_files: int) -> int:
         # synthetic manifest: only the plan SHAPE is under test here
         sizes = {f"part-{i:05d}.parquet": 1024 * (i % 7 + 1) for i in range(n_files)}
-        tagged, _ = t._bin_tagged(snapshot, sizes, "id", 4096)
+        tagged, _ = plan_tagged_bins(spark, snapshot, sizes, "id", 4096)
         plan = tagged._jdf.queryExecution().optimizedPlan().toString()
         assert "create_map" not in plan
         return len(plan)

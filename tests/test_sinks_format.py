@@ -104,9 +104,16 @@ def test_versioned_table_merge_delete_keeps_history(spark, tmp_path):
 
 
 def test_foreach_batch_upsert_exactly_once(spark, tmp_path):
-    src = str(tmp_path / "src")
-    target = str(tmp_path / "target")
-    ckpt = str(tmp_path / "ckpt")
+    # a plain path and a URI target: the sink's existence check must
+    # resolve a URI the way the reader does, or every epoch takes the
+    # create branch and overwrites the prior epochs' rows
+    _upsert_twice_then_replay(spark, tmp_path / "local", str(tmp_path / "local" / "target"))
+    _upsert_twice_then_replay(spark, tmp_path / "uri", (tmp_path / "uri" / "target").as_uri())
+
+
+def _upsert_twice_then_replay(spark, root, target):
+    src = str(root / "src")
+    ckpt = str(root / "ckpt")
     t0 = dt.datetime(2024, 1, 1)
 
     def run():
