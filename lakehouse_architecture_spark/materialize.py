@@ -17,7 +17,7 @@ the 100 TB design point, so this module centralizes the policy:
   ``persist(MEMORY_AND_DISK)`` keeps full lineage: an executor loss
   recomputes only the lost partitions; the consumer plan shows the
   subtree under ``InMemoryRelation`` (cached lineage — it executes once,
-  see tools/scan_audit.py).
+  see plans/inspect.scan_counts).
 
 - :func:`truncate_lineage` — for intermediates where lineage truncation is
   itself the point: iterative algorithms whose plans grow per round

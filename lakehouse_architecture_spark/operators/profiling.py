@@ -205,7 +205,7 @@ def ks_drift(
     )
     # groups x nbins rows, referenced by the grid/pooled/joined subplans
     # below — materialized = ONE scan of the fact (plus the min/max
-    # pass), not one per reference (tools/scan_audit.py)
+    # pass), not one per reference (plans/inspect.scan_counts)
     binned = materialize_small(binned)
     spark = df.sparkSession
     grid = (

@@ -256,6 +256,37 @@ def _verification_history(repo: str | None = None) -> dict[str, tuple[int, int]]
     return hist
 
 
+def engine_source_digest(repo: str | None = None) -> str:
+    """SHA-256 over every .py file under lakehouse_architecture_spark/
+    (relative path + content, sorted walk) — a clone-stable fingerprint of
+    the engine code a LOCAL_ORACLE.json full run vouches for. The WHOLE
+    package is hashed (not just queries/sources/operators): queries reach
+    into catalog.py, functions/, pipeline/, and materialize.py, and the
+    round-5 staleness incident was exactly a non-queries file (a manifest
+    schema) changing under green rows."""
+    import hashlib
+    import os
+
+    if repo is None:
+        repo = os.path.dirname(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        )
+    pkg = os.path.join(repo, "lakehouse_architecture_spark")
+    h = hashlib.sha256()
+    for root, dirs, files in os.walk(pkg):
+        dirs[:] = sorted(d for d in dirs if d != "__pycache__")
+        for fn in sorted(files):
+            if not fn.endswith(".py"):
+                continue
+            p = os.path.join(root, fn)
+            h.update(os.path.relpath(p, repo).encode())
+            h.update(b"\0")
+            with open(p, "rb") as f:
+                h.update(f.read())
+            h.update(b"\0")
+    return h.hexdigest()
+
+
 def _stale_names(
     module_mtime: dict[str, float],
     green_record_mtime: dict[str, float],

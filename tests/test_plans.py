@@ -10,6 +10,8 @@ from lakehouse_architecture_spark.plans.inspect import (
     assert_no_cartesian,
     assert_pushed_filters,
     formatted_plan,
+    live_scan_count,
+    plan_summary,
 )
 from lakehouse_architecture_spark.queries.registry import ALL_QUERIES
 
@@ -210,8 +212,6 @@ def test_url_canon_is_narrow_map(spark):
     df = t["documents"].select(
         "doc_id", canonicalize_url(F.concat(F.lit("https://Example.com/x?b=2&a=1&utm_source="), F.col("source"))).alias("u")
     )
-    from lakehouse_architecture_spark.plans.inspect import plan_summary
-
     ops = plan_summary(df)
     assert ops.get("Exchange", 0) == 0, ops
     # a narrow Project over the scan — complex string/array lambdas fall
@@ -220,8 +220,6 @@ def test_url_canon_is_narrow_map(spark):
 
 
 def test_zorder_value_is_narrow_map(spark):
-    from lakehouse_architecture_spark.plans.inspect import plan_summary
-
     df = _q(spark, "q_zorder")
     ops = plan_summary(df)
     # one range-partition exchange for the presentation orderBy; the z
@@ -229,10 +227,26 @@ def test_zorder_value_is_narrow_map(spark):
     assert ops.get("Exchange", 0) <= 1, ops
 
 
+def test_plan_summary_counts_every_tree_node(spark):
+    """plan_summary is a histogram of the physical TREE. A parser of the
+    explain text dropped every node nested below a ``:  `` indentation
+    and named nodes by the last word before ``(``: it saw no Exchange
+    and no BroadcastHashJoin in q21, one scan (keyed ``parquet``) in
+    q05, and counted q01's initial and final adaptive plans twice."""
+    ops = plan_summary(_q(spark, "q21_sole_late"))  # not executed
+    assert ops["Exchange"] >= 3, ops
+    assert ops["BroadcastHashJoin"] == 2, ops
+    ops = plan_summary(_q(spark, "q05_nation_revenue"))
+    assert ops["Scan parquet"] == 6, ops
+    df = _q(spark, "q01_pricing_summary")
+    df.collect()
+    assert plan_summary(df)["Exchange"] == 2
+
+
 def test_q02_broadcast_dims_no_cartesian(spark):
     df = _q(spark, "q02_min_cost_supplier")
     assert_no_cartesian(df)
-    assert_broadcast_join(df, min_count=1)
+    assert_broadcast_join(df)
 
 
 def test_analytics_windows_partition_by_user(spark):
@@ -421,14 +435,8 @@ def test_multi_reference_operators_scan_sources_boundedly(spark):
     re-scanning the fact per reference. Counts LIVE file-scan leaves in
     the final executed plan via a physical-tree walk (cached
     InMemoryRelation lineage and checkpointed ExistingRDD subtrees run at
-    most once — see tools/scan_audit.py). Bounds are the fixed plans'
+    most once — see plans/inspect.py). Bounds are the fixed plans'
     counts + 1 slack; q_triangles was 288 before the fix."""
-    import os
-    import sys
-
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from tools.scan_audit import live_scan_count
-
     bounds = {
         "q_percentile": 3,      # was 15
         "q_equidepth_bins": 3,  # was 15
@@ -462,14 +470,6 @@ def test_registry_wide_live_scan_gate(spark):
     count (6-table TPC-H joins + a self-join) + slack; per-query pins for
     known-risky plans stay in the test above. Runs at sf0.001 so the full
     sweep stays a few minutes."""
-    import os
-    import sys
-
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from tools.scan_audit import live_scan_count
-
-    from lakehouse_architecture_spark.queries.registry import ALL_QUERIES
-
     THRESHOLD = 8
     over: dict[str, int] = {}
     for name, spec in ALL_QUERIES.items():

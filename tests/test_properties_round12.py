@@ -3,7 +3,7 @@ with brute-force Python references (the test_properties_round4.py model)."""
 
 import math
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 SETTINGS = dict(
@@ -147,8 +147,14 @@ def test_woe_iv_random_parity(spark, rows):
         max_size=60,
     )
 )
+# 6-dp ties: the 9-dp terms sum to exactly ...5 in the 7th decimal. A
+# float sum lands above the tie on the first stream (0.6490225000000001)
+# and below it on the second, which the float reference rounded down
+@example([(1, "y"), (2, "z"), (2, "y"), (3, "z"), (2, "z"), (1, "y"), (1, "y"), (1, "y")])
+@example([(3, "z"), (3, "z"), (2, "y"), (2, "y"), (3, "y"), (2, "x"), (3, "x")])
 def test_transition_entropy_random_parity(spark, rows):
     import datetime
+    from decimal import ROUND_HALF_UP, Decimal
 
     from pyspark.sql import Row
 
@@ -180,8 +186,13 @@ def test_transition_entropy_random_parity(spark, rows):
     ni = {}
     for (p, _), c in steps.items():
         ni[p] = ni.get(p, 0) + c
+    # the operator's arithmetic: each term rounded half-up to 9 dp, an
+    # exact decimal sum, then half-up to 6 dp (Spark's round())
+    def half_up(x, dp):
+        return Decimal(str(x)).quantize(Decimal(1).scaleb(-dp), ROUND_HALF_UP)
+
     h = -sum(
-        round((c / n_total) * math.log2(c / ni[p]), 9)
+        half_up((c / n_total) * math.log2(c / ni[p]), 9)
         for (p, _), c in steps.items()
     )
     # ADVICE r12: states = union of prev AND nxt (terminal types count)
@@ -192,7 +203,7 @@ def test_transition_entropy_random_parity(spark, rows):
     ).collect()[0]
     assert got.n_transitions == n_total
     assert got.n_states == n_states
-    assert got.cond_entropy_bits == _approx(round(h, 6), tol=1e-6)
+    assert got.cond_entropy_bits == _approx(float(half_up(h, 6)), tol=1e-6)
 
 
 # --- snapshot diff audit: parity with a dict-based reference

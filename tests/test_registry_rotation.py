@@ -131,7 +131,6 @@ def test_local_oracle_artifact_not_stale():
     were defeated by a bare ``touch`` of the artifact)."""
     import json
     import os
-    import sys
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     path = os.path.join(repo, "LOCAL_ORACLE.json")
@@ -166,16 +165,13 @@ def test_local_oracle_artifact_not_stale():
     # freshness: the artifact's stamped source digest must match the
     # CURRENT engine source — clone-stable (content, not mtimes) and not
     # defeatable by touching the artifact
-    sys.path.insert(0, repo)
-    from tools.oracle_check import engine_source_digest
-
     stamped = meta.get("source_digest")
     assert stamped, (
         "LOCAL_ORACLE.json __meta__ lacks source_digest (pre-round-7 "
         "artifact); re-run tools/oracle_check.py --all --json "
         "LOCAL_ORACLE.json /root/testdata/sf0.01"
     )
-    current = engine_source_digest(repo)
+    current = registry.engine_source_digest(repo)
     assert stamped == current, (
         "engine source changed since the last full oracle run "
         f"(stamped {stamped[:12]}…, current {current[:12]}…); re-run "

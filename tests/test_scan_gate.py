@@ -3,8 +3,9 @@
 The round-6 and round-14 un-pinned-intermediate regressions (a composed
 plan re-running its corpus aggregation once per downstream reference — 18
 live fact scans in q_wasserstein's first cut) were both caught by a MANUAL
-run of tools/scan_audit.py. This codifies it: a representative query set —
-every plan family that pins a multiply-referenced intermediate, plus the
+run of tools/scan_audit.py. This codifies it with the same counter
+(plans/inspect.scan_counts): a representative query set — every plan
+family that pins a multiply-referenced intermediate, plus the
 deliberately multi-scan audit query as a whitelisted control — executes at
 sf0.001 and must keep its LIVE file-scan count at or under the audit
 threshold. A future operator edit that drops a materialize_small pin (or
@@ -17,6 +18,7 @@ from __future__ import annotations
 import pytest
 
 from lakehouse_architecture_spark.materialize import release_small_pins
+from lakehouse_architecture_spark.plans.inspect import scan_counts
 from lakehouse_architecture_spark.queries.registry import ALL_QUERIES
 
 SF = "/root/testdata/sf0.001"
@@ -58,8 +60,6 @@ REPRESENTATIVE = [
 
 @pytest.mark.parametrize("name", REPRESENTATIVE)
 def test_live_scan_count_bounded(spark, name):
-    from tools.scan_audit import scan_counts
-
     df = ALL_QUERIES[name].build(spark, SF)
     try:
         df.collect()

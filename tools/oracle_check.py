@@ -43,34 +43,11 @@ import pandas as pd
 
 from lakehouse_architecture_spark.catalog import TESTDATA_TABLES
 from lakehouse_architecture_spark.materialize import release_small_pins
-from lakehouse_architecture_spark.queries.registry import ALL_QUERIES
+from lakehouse_architecture_spark.queries.registry import (
+    ALL_QUERIES,
+    engine_source_digest,
+)
 from lakehouse_architecture_spark.session import SessionFactory
-
-
-def engine_source_digest(repo_root: str | None = None) -> str:
-    """SHA-256 over every .py file under lakehouse_architecture_spark/
-    (relative path + content, sorted walk) — a clone-stable fingerprint of
-    the engine code a LOCAL_ORACLE.json full run vouches for. The WHOLE
-    package is hashed (not just queries/sources/operators): queries reach
-    into catalog.py, functions/, pipeline/, and materialize.py, and the
-    round-5 staleness incident was exactly a non-queries file (a manifest
-    schema) changing under green rows."""
-    if repo_root is None:
-        repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    pkg = os.path.join(repo_root, "lakehouse_architecture_spark")
-    h = hashlib.sha256()
-    for root, dirs, files in os.walk(pkg):
-        dirs[:] = sorted(d for d in dirs if d != "__pycache__")
-        for fn in sorted(files):
-            if not fn.endswith(".py"):
-                continue
-            p = os.path.join(root, fn)
-            h.update(os.path.relpath(p, repo_root).encode())
-            h.update(b"\0")
-            with open(p, "rb") as f:
-                h.update(f.read())
-            h.update(b"\0")
-    return h.hexdigest()
 
 
 def canonical(df: pd.DataFrame) -> tuple[int, str, list[str]]:

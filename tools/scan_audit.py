@@ -11,20 +11,10 @@ tables; a self-join scans its table twice) — the audit flags queries whose
 scan count exceeds a threshold so a human checks whether the repeats hit
 the same big fact.
 
-Counting is a py4j walk of the physical plan TREE (round 7 — the previous
-string/indentation parser miscounted nested AdaptiveSparkPlan sections
-that re-print inside InMemoryRelation at reset indentation):
-
-- ``InMemoryTableScanExec`` subtrees are NOT descended: their lineage
-  populates the cache at most once, then every reference reads cached
-  rows (that is the invariant being audited).
-- ``ReusedExchangeExec`` is not descended: it re-reads a shuffle already
-  counted once on its primary branch.
-- ``AdaptiveSparkPlanExec`` recurses into its current final plan;
-  query-stage wrappers recurse into their materialized stage plan.
-- A subtree pinned by ``localCheckpoint``/``checkpoint`` appears as a
-  ``Scan ExistingRDD`` leaf (not a file scan — its upstream ran exactly
-  once in its own job; see lakehouse_architecture_spark/materialize.py).
+Counting is the package's physical-plan walk,
+``lakehouse_architecture_spark.plans.inspect.scan_counts`` (its docstring
+states the counting rules); this module is its command-line front end and
+re-exports ``scan_counts`` / ``live_scan_count`` for existing importers.
 
 Usage: python tools/scan_audit.py [sf_dir] [threshold] [query ...]
 Prints one JSON line per flagged query, then a summary line.
@@ -38,57 +28,12 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from lakehouse_architecture_spark.plans.inspect import (  # noqa: F401 (re-export)
+    live_scan_count,
+    scan_counts,
+)
 from lakehouse_architecture_spark.queries.registry import ALL_QUERIES
 from lakehouse_architecture_spark.session import SessionFactory
-
-#: Physical scan leaves that read source files.
-_FILE_SCAN_CLASSES = {"FileSourceScanExec", "BatchScanExec"}
-
-
-def _walk(node, live: bool, counts: dict) -> None:
-    cls = node.getClass().getSimpleName()
-    if cls in _FILE_SCAN_CLASSES:
-        counts["total"] += 1
-        if live:
-            counts["live"] += 1
-        return
-    if cls == "AdaptiveSparkPlanExec":
-        _walk(node.executedPlan(), live, counts)
-        return
-    if cls.endswith("QueryStageExec"):
-        _walk(node.plan(), live, counts)
-        return
-    if cls.startswith("ReusedExchange") or cls.startswith("ReusedSubquery"):
-        counts["reused"] += 1
-        # its subtree executes on the primary branch only — walk it as
-        # non-live so cached-lineage totals stay comparable
-        live = False
-    if cls == "InMemoryTableScanExec":
-        # cached: lineage below populates the cache at most once
-        live = False
-        rel = node.relation().cachedPlan()
-        _walk(rel, live, counts)
-        return
-    ch = node.children()
-    for i in range(ch.size()):
-        _walk(ch.apply(i), live, counts)
-
-
-def scan_counts(df) -> dict:
-    """Counts over the executed physical plan of an already-executed
-    DataFrame: ``live`` = file scans that execute when this plan runs,
-    ``total`` = live + scans inside cached/reused subtrees, ``reused`` =
-    reuse nodes encountered."""
-    counts = {"live": 0, "total": 0, "reused": 0}
-    _walk(df._jdf.queryExecution().executedPlan(), True, counts)
-    return counts
-
-
-def live_scan_count(df) -> int:
-    """File-source scan leaves that EXECUTE in this DataFrame's final
-    plan (cached / reused subtrees excluded). Takes the DataFrame (round
-    7: tree walk), not a plan string."""
-    return scan_counts(df)["live"]
 
 
 def main() -> int:

@@ -1,12 +1,19 @@
-"""Steady-state timing probe — the reproducible source for the README's
-per-query sampling-artifact claims.
+"""Steady-state timing probe — the per-change before/after probe for an
+operator edit, and the reproducible source for the README's per-query
+sampling-artifact claims.
 
 Runs each query N times against the SAME warmed, cached tables bench.py
 uses and reports min/median/max, separating plan cost (the min) from
 sampling noise (the spread). Use when a bench number moves and you need
 to know whether the PLAN changed or the box was noisy.
 
-Usage: python tools/steady_probe.py [sf_dir] [n_runs] [query ...]
+Bench methodology: warm cached tables, one untimed settling pass over
+every named query (compiles the cached-table plans' codegen), then the
+timed noop-sink runs. Each run's materialize_small pins are released
+after it, so every sample times the same program — build, pins and sink,
+as bench.py's first warm run of a query does.
+
+Usage: python tools/steady_probe.py <sf_dir> <n_runs> <query> [query ...]
 
 Reference run (sf0.1, local[32], 6 runs, round 3):
   q21_sole_late  samples [3.14, 1.14, 1.01, 0.99, 0.89, 0.87] — settles ~0.9-1.0 s
@@ -24,32 +31,43 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from lakehouse_architecture_spark.materialize import release_small_pins
 from lakehouse_architecture_spark.queries.base import warm_cached_tables
 from lakehouse_architecture_spark.queries.registry import ALL_QUERIES
 from lakehouse_architecture_spark.session import SessionFactory
 
-DEFAULT_QUERIES = ["q21_sole_late", "q_minhash_lsh", "q01_pricing_summary"]
+USAGE = next(ln for ln in __doc__.splitlines() if ln.startswith("Usage:"))
 
 
-def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    n_runs = int(sys.argv[2]) if len(sys.argv) > 2 else 6
-    names = sys.argv[3:] or DEFAULT_QUERIES
+def _run(spark, name: str, sf_dir: str) -> float:
+    t0 = time.time()
+    ALL_QUERIES[name].build(spark, sf_dir).write.format("noop").mode(
+        "overwrite"
+    ).save()
+    elapsed = time.time() - t0
+    release_small_pins(spark)  # lifecycle, outside the timer
+    return elapsed
+
+
+def main(argv: list[str]) -> int:
+    if len(argv) < 3 or not argv[1].isdigit() or int(argv[1]) < 1:
+        print(USAGE, file=sys.stderr)
+        return 2
+    sf_dir, n_runs, names = argv[0], int(argv[1]), argv[2:]
+    unknown = [n for n in names if n not in ALL_QUERIES]
+    if unknown:
+        print(f"unknown query: {', '.join(unknown)}\n{USAGE}", file=sys.stderr)
+        return 2
 
     spark = SessionFactory(app_name="steady_probe").get_or_create()
     # identical warm-cache setup to bench.py's timed section — one shared
     # implementation so the two can never drift
     warm_cached_tables(spark, sf_dir)
+    for qname in names:  # settling pass, untimed
+        _run(spark, qname, sf_dir)
 
     for qname in names:
-        spec = ALL_QUERIES[qname]
-        samples = []
-        for _ in range(n_runs):
-            t0 = time.time()
-            spec.build(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            samples.append(round(time.time() - t0, 3))
+        samples = [round(_run(spark, qname, sf_dir), 3) for _ in range(n_runs)]
         print(
             json.dumps(
                 {
@@ -63,7 +81,8 @@ def main() -> None:
             )
         )
     spark.stop()
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main(sys.argv[1:]))
